@@ -45,14 +45,12 @@ def _start_session(work: str, nproc: int):
     tasks import it whatever the working directory is."""
     from docs_indexer_spark.session import get_spark
 
-    tmp = os.path.join(work, "tmp")
     spark = get_spark(
         app_name="perfbench",
         master=f"local[{nproc}]",
         shuffle_partitions=SHUFFLE_PARTITIONS_PER_CORE * nproc,
         extra_conf={
             "spark.driver.memory": DRIVER_MEMORY,
-            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp}",
             "spark.local.dir": os.path.join(work, "local"),
             "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
             "spark.executorEnv.PYTHONPATH": ROOT,
@@ -97,11 +95,14 @@ def main(argv=None) -> int:
         return 2
     sys.path.insert(0, ROOT)
 
-    nproc = os.cpu_count() or 1
+    nproc = len(os.sched_getaffinity(0))  # what `nproc` prints
     work = os.path.join(ROOT, ".perfbench_work", f"run-{os.getpid()}")
-    os.makedirs(os.path.join(work, "tmp"), exist_ok=True)
-    # the gateway launcher and the Python workers make temp files
-    os.environ["TMPDIR"] = os.path.join(work, "tmp")
+    tmp = os.path.join(work, "tmp")
+    os.makedirs(tmp, exist_ok=True)
+    # the gateway launcher and the Python workers make temp files; every
+    # JVM would also write /tmp/hsperfdata_<user>, so perf data is off
+    os.environ["TMPDIR"] = tmp
+    os.environ["JAVA_TOOL_OPTIONS"] = f"-XX:-UsePerfData -Djava.io.tmpdir={tmp}"
 
     import importlib
 
