@@ -131,7 +131,6 @@ class Tracer:
         self.spans: list[Span] = []
         self._stack: list[Span] = []
         self._ids = itertools.count(1)
-        self.bookkeeping_s = 0.0  # status-store reads: the tracer's own cost
 
     @contextmanager
     def span(self, name: str, trace_id: str | None = None):
@@ -155,9 +154,7 @@ class Tracer:
                 self.sc.setJobGroup(f"perfbench-{self._stack[-1].span_id}", "")
             else:
                 self.sc.setLocalProperty("spark.jobGroup.id", None)
-            t0 = time.perf_counter()
             sp.stats = group_stats(self.sc, group)
-            self.bookkeeping_s += time.perf_counter() - t0
             self.spans.append(sp)
 
     def self_times(self) -> dict[int, float]:
