@@ -25,7 +25,19 @@ SYLLABLES = [
     "gra", "ple", "sta", "tri", "vra", "sno", "qua", "mek", "tor", "lin",
 ]
 STOPWORDS = ["the", "and", "of", "to", "in", "a", "is", "for", "on", "with"]
-# lang shares: "en" dominates; the rare values are the selective filters
+# The shape below is assumed, not measured from a real crawl.  500 topics
+# and 5% exact copies are the sizes at which MinHash-LSH returned exactly
+# the injected pairs and simhash a bounded pair set at 5k docs; the other
+# values are plausible guesses for web text.
+N_TOPICS = 500
+TOPIC_WORDS = 40  # distinct words per topic vocabulary
+BACKGROUND_WORDS = 20_000  # shared vocabulary every topic also draws from
+TOPIC_ZIPF, BACKGROUND_ZIPF = 1.3, 1.1  # rank-frequency exponents
+STOPWORD_SHARE, TOPIC_SHARE = 0.20, 0.55  # the rest is background
+EXACT_FRAC, NEAR_FRAC = 0.05, 0.02  # injected exact and near copies
+MIN_LEN, MAX_LEN = 60, 300  # words per document
+# lang shares (assumed): "en" dominates; the rare values are the selective
+# filters of the serve workload
 LANGS = ["en", "de", "fr", "es", "pt", "nl"]
 LANG_P = [0.80, 0.06, 0.05, 0.04, 0.03, 0.02]
 _BASE_TS = np.datetime64("2026-01-01T00:00:00")
@@ -57,42 +69,32 @@ def _vocab(rng: np.random.Generator, size: int) -> list[str]:
     return out
 
 
-def generate(
-    seed: int,
-    n_docs: int,
-    n_topics: int = 500,
-    topic_words: int = 40,
-    background_words: int = 20_000,
-    exact_frac: float = 0.05,
-    near_frac: float = 0.02,
-    min_len: int = 60,
-    max_len: int = 300,
-) -> Corpus:
-    """``n_docs`` documents; ``exact_frac`` of them copy an earlier
-    original verbatim and ``near_frac`` copy one with ~3% of words
+def generate(seed: int, n_docs: int) -> Corpus:
+    """``n_docs`` documents; ``EXACT_FRAC`` of them copy an earlier
+    original verbatim and ``NEAR_FRAC`` copy one with ~3% of words
     replaced.  No document is empty, so no operator sees a degenerate row."""
     rng = np.random.default_rng(seed)
-    vocab = _vocab(rng, background_words + n_topics * topic_words // 2)
-    background = vocab[:background_words]
-    pool = vocab[background_words:]
+    vocab = _vocab(rng, BACKGROUND_WORDS + N_TOPICS * TOPIC_WORDS // 2)
+    background = vocab[:BACKGROUND_WORDS]
+    pool = vocab[BACKGROUND_WORDS:]
     topics = [
-        [pool[int(j)] for j in rng.choice(len(pool), topic_words, replace=False)]
-        for _ in range(n_topics)
+        [pool[int(j)] for j in rng.choice(len(pool), TOPIC_WORDS, replace=False)]
+        for _ in range(N_TOPICS)
     ]
-    n_exact = int(n_docs * exact_frac)
-    n_near = int(n_docs * near_frac)
+    n_exact = int(n_docs * EXACT_FRAC)
+    n_near = int(n_docs * NEAR_FRAC)
     n_orig = n_docs - n_exact - n_near
     bodies: list[list[str]] = []
     for _ in range(n_orig):
-        topic = topics[int(rng.integers(0, n_topics))]
-        n = int(rng.integers(min_len, max_len))
+        topic = topics[int(rng.integers(0, N_TOPICS))]
+        n = int(rng.integers(MIN_LEN, MAX_LEN))
         kind = rng.random(n)
-        t_rank = np.minimum(rng.zipf(1.3, n), topic_words) - 1
-        b_rank = np.minimum(rng.zipf(1.1, n), background_words) - 1
+        t_rank = np.minimum(rng.zipf(TOPIC_ZIPF, n), TOPIC_WORDS) - 1
+        b_rank = np.minimum(rng.zipf(BACKGROUND_ZIPF, n), BACKGROUND_WORDS) - 1
         s_idx = rng.integers(0, len(STOPWORDS), n)
         bodies.append([
-            STOPWORDS[s_idx[i]] if kind[i] < 0.2
-            else topic[t_rank[i]] if kind[i] < 0.75
+            STOPWORDS[s_idx[i]] if kind[i] < STOPWORD_SHARE
+            else topic[t_rank[i]] if kind[i] < STOPWORD_SHARE + TOPIC_SHARE
             else background[b_rank[i]]
             for i in range(n)
         ])
@@ -105,7 +107,7 @@ def generate(
         src = int(rng.integers(0, n_orig))
         body = list(bodies[src])
         for j in rng.choice(len(body), max(1, len(body) // 33), replace=False):
-            body[int(j)] = background[int(rng.integers(0, background_words))]
+            body[int(j)] = background[int(rng.integers(0, BACKGROUND_WORDS))]
         near_pairs.append((src, len(bodies)))
         bodies.append(body)
     langs = [LANGS[int(j)] for j in rng.choice(len(LANGS), n_docs, p=LANG_P)]

@@ -58,9 +58,23 @@ def covered(intervals) -> float:
     return total
 
 
+def _drain(sc) -> None:
+    """Wait until the listener bus has put every finished job, stage and
+    SQL execution into the status stores."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+
+
+def _ids(scala_set) -> set[int]:
+    out, it = set(), scala_set.iterator()
+    while it.hasNext():
+        out.add(int(it.next()))
+    return out
+
+
 def group_stats(sc, group: str) -> GroupStats:
     """Jobs, stages and per-stage task metrics of one finished job group.
     Skipped stages (their shuffle output was reused) count as no work."""
+    _drain(sc)
     store = sc._jsc.sc().statusStore()
     out = GroupStats()
     intervals = []
@@ -92,6 +106,42 @@ def group_stats(sc, group: str) -> GroupStats:
     return out
 
 
+def plan_rows(spark, group: str) -> dict[str, int]:
+    """Output rows per plan-node name, summed over the final (adaptive)
+    plans of the SQL executions that ran the job group's jobs.  A reused
+    exchange is one node, so a subtree Spark computes once counts once.
+    Raises if one of those executions also ran a job outside the group:
+    then the group would not hold all of the execution's work."""
+    sc = spark.sparkContext
+    _drain(sc)
+    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    rows: dict[str, int] = {}
+    for i in range(execs.length()):
+        ex = execs.apply(i)
+        ex_jobs = _ids(ex.jobs().keys())
+        if not ex_jobs & jobs:
+            continue
+        if not ex_jobs <= jobs:
+            raise RuntimeError(f"SQL execution {ex.executionId()} ran jobs outside {group}")
+        values, it = {}, store.executionMetrics(ex.executionId()).iterator()
+        while it.hasNext():
+            kv = it.next()
+            values[int(kv._1())] = kv._2()
+        nodes = store.planGraph(ex.executionId()).allNodes()
+        for j in range(nodes.length()):
+            node = nodes.apply(j)
+            metrics = node.metrics()
+            for k in range(metrics.length()):
+                m = metrics.apply(k)
+                v = values.get(int(m.accumulatorId()))
+                if m.name() == "number of output rows" and v is not None:
+                    name = node.name().strip()
+                    rows[name] = rows.get(name, 0) + int(v.replace(",", ""))
+    return rows
+
+
 def spark_totals(spans, n_ops: int) -> dict:
     """The status-store totals of ``spans`` per operation."""
     acc = GroupStats()
@@ -118,6 +168,11 @@ class Span:
     end: float = 0.0
     stats: GroupStats | None = None
 
+    @property
+    def group(self) -> str:
+        """The Spark job group the span's own calls run under."""
+        return f"perfbench-{self.span_id}"
+
 
 class Tracer:
     """Spans kept in memory; :meth:`dump` writes them when the run ends.
@@ -142,19 +197,18 @@ class Tracer:
             parent.span_id if parent else None,
             time.perf_counter(),
         )
-        group = f"perfbench-{sp.span_id}"
         self._stack.append(sp)
-        self.sc.setJobGroup(group, name)
+        self.sc.setJobGroup(sp.group, name)
         try:
             yield sp
         finally:
             sp.end = time.perf_counter()
             self._stack.pop()
             if self._stack:
-                self.sc.setJobGroup(f"perfbench-{self._stack[-1].span_id}", "")
+                self.sc.setJobGroup(self._stack[-1].group, "")
             else:
                 self.sc.setLocalProperty("spark.jobGroup.id", None)
-            sp.stats = group_stats(self.sc, group)
+            sp.stats = group_stats(self.sc, sp.group)
             self.spans.append(sp)
 
     def self_times(self) -> dict[int, float]:

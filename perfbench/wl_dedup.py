@@ -12,7 +12,8 @@ The measured pass is the first one in a fresh session, as a
 ``spark-submit dedup`` job runs it.  It takes longer than ``--seconds``, so
 a run measures exactly one pass; warm passes differed by 10-30% from run to
 run on a 4-vCPU host, against 3.5% for the cold one.  A traced run adds warm
-passes for ``--seconds`` and the per-operator spans.
+passes for ``--seconds``, plain and inside spans in turn, then times each
+operator on materialized inputs and reads the minhash chain's plan metrics.
 """
 
 from __future__ import annotations
@@ -20,12 +21,13 @@ from __future__ import annotations
 import os
 import sys
 import time
+from contextlib import nullcontext
 
 import corpus as corpus_mod
 from harness import Outcome, median
-from sparkstats import spark_totals
+from sparkstats import plan_rows, spark_totals
 
-N_DOCS = 2000
+N_DOCS = 10_000  # see README "Corpus size": the joins' data work shows in op_p50_s
 NUM_HASHES, BANDS, MAX_HAMMING = 16, 4, 3
 
 
@@ -69,16 +71,21 @@ def winnow(docs) -> dict:
     return {r[0]: (r[1], r[2]) for r in agg.collect()}
 
 
-def one_pass(docs) -> tuple[dict, tuple]:
-    """Time the three operators; returns (seconds per operator, answers)."""
+def one_pass(docs, tracer=None) -> tuple[dict, tuple]:
+    """Time the three operators; returns (seconds per operator, answers).
+    With a tracer, each operator runs inside its own span."""
     from docs_indexer_spark.operators.dedup import simhash64
 
+    span = tracer.span if tracer is not None else (lambda name: nullcontext())
     t0 = time.perf_counter()
-    lsh = minhash_pairs(docs)
+    with span("dedup.minhash_pairs"):
+        lsh = minhash_pairs(docs)
     t1 = time.perf_counter()
-    sim = simhash_pairs(simhash64(docs, hash="xx"))
+    with span("dedup.simhash_pairs"):
+        sim = simhash_pairs(simhash64(docs, hash="xx"))
     t2 = time.perf_counter()
-    fps = winnow(docs)
+    with span("dedup.winnow"):
+        fps = winnow(docs)
     t3 = time.perf_counter()
     return {"minhash": t1 - t0, "simhash": t2 - t1, "winnow": t3 - t2}, (lsh, sim, fps)
 
@@ -93,40 +100,38 @@ def check(out: Outcome, corpus, answers) -> None:
     out.check(not winnow_diff, f"winnow differs on exact pairs {winnow_diff[:5]}")
 
 
-def _traced(ctx, path: str, corpus, untraced_pass_s: float) -> dict:
+def _layers(ctx, path: str, corpus) -> dict:
     """Each operator on its own, its input materialized first, then the
     production minhash chain on the parquet input for its scan count."""
     from docs_indexer_spark.operators.dedup import minhash_signatures, simhash64
 
     spark, tr = ctx.spark, ctx.tracer
     docs = spark.read.parquet(path).localCheckpoint()
-    with tr.span("dedup.minhash_sig", trace_id="pass"):
+    with tr.span("dedup.minhash_sig", trace_id="layers"):
         sigs = minhash_signatures(docs, num_hashes=NUM_HASHES, hash="xx").localCheckpoint()
-    with tr.span("dedup.lsh_pairs", trace_id="pass"):
+    with tr.span("dedup.lsh_pairs", trace_id="layers"):
         lsh = lsh_pairs(sigs)
-    with tr.span("dedup.simhash_sig", trace_id="pass"):
+    with tr.span("dedup.simhash_sig", trace_id="layers"):
         sims = simhash64(docs, hash="xx").localCheckpoint()
-    with tr.span("dedup.simhash_join", trace_id="pass"):
+    with tr.span("dedup.simhash_join", trace_id="layers"):
         sim = simhash_pairs(sims)
-    with tr.span("dedup.winnow", trace_id="pass"):
-        winnow(docs)
-    traced_pass_s = sum(sp.end - sp.start for sp in tr.spans)
-
-    with tr.span("dedup.minhash_chain", trace_id="chain"):
+    with tr.span("dedup.minhash_chain", trace_id="chain") as chain:
         minhash_pairs(spark.read.parquet(path))
-    chain = tr.by_name("dedup.minhash_chain")[0]
+    rows = plan_rows(spark, chain.group)
     injected = set(corpus.exact_pairs) | set(corpus.near_pairs)
     return {
         "dedup.minhash_sig_s": tr.total("dedup.minhash_sig"),
         "dedup.lsh_pairs_s": tr.total("dedup.lsh_pairs"),
         "dedup.simhash_sig_s": tr.total("dedup.simhash_sig"),
         "dedup.simhash_join_s": tr.total("dedup.simhash_join"),
-        "dedup.input_scans": chain.stats.totals["input_records"] / N_DOCS,
+        # rows out of the scan and out of the banding explode, per corpus
+        # row: how often the chain reads its input and evaluates the banded
+        # signatures the LSH self-join puts on both of its sides
+        "dedup.input_scans": rows.get("Scan parquet", 0) / N_DOCS,
+        "dedup.band_evals": rows.get("Generate", 0) / (BANDS * N_DOCS),
         "dedup.lsh_candidates": len(lsh),
         "dedup.simhash_pairs": len(sim),
         "dedup.lsh_precision": len(injected & lsh) / max(1, len(lsh)),
-        "trace.overhead_s": traced_pass_s - untraced_pass_s,
-        **spark_totals([sp for sp in tr.spans if sp.trace_id == "pass"], 1),
     }
 
 
@@ -146,16 +151,34 @@ def run(ctx, inputs) -> Outcome:
         "op_p50_s": first_s,
         "items_per_s": N_DOCS / first_s,
     })
-    if ctx.tracer is None:
+    tr = ctx.tracer
+    if tr is None:
         return out
-    passes = []
+    # warm passes, plain and inside spans, in pairs whose order alternates
+    # (a later pass is warmer): the tracer's cost is the difference of the
+    # two medians over the same work.  The first warm pass is still slower
+    # than the rest, so it only warms up.
+    check(out, corpus, one_pass(docs)[1])
+    plain, spanned = [], []
     deadline = time.perf_counter() + ctx.seconds
-    while not passes or time.perf_counter() < deadline:
-        times, answers = one_pass(docs)
-        passes.append(times)
-        check(out, corpus, answers)
-    out.metrics["dedup.minhash_pairs_s"] = median([p["minhash"] for p in passes])
-    out.metrics["dedup.simhash_pairs_s"] = median([p["simhash"] for p in passes])
-    out.metrics["dedup.winnow_s"] = median([p["winnow"] for p in passes])
-    out.metrics.update(_traced(ctx, path, corpus, median([sum(p.values()) for p in passes])))
+    while len(spanned) < 2 or time.perf_counter() < deadline:
+        for traced in (len(spanned) % 2 == 1, len(spanned) % 2 == 0):
+            if traced:
+                t0 = time.perf_counter()
+                with tr.span("dedup.pass", trace_id=f"pass{len(spanned)}"):
+                    _, answers = one_pass(docs, tr)
+                spanned.append(time.perf_counter() - t0)
+            else:
+                times, answers = one_pass(docs)
+                plain.append(times)
+            check(out, corpus, answers)
+    out.metrics["dedup.minhash_pairs_s"] = median([p["minhash"] for p in plain])
+    out.metrics["dedup.simhash_pairs_s"] = median([p["simhash"] for p in plain])
+    out.metrics["dedup.winnow_s"] = median([p["winnow"] for p in plain])
+    out.metrics["trace.overhead_s"] = median(spanned) - median(
+        [sum(p.values()) for p in plain]
+    )
+    passes = [sp for sp in tr.spans if sp.trace_id.startswith("pass")]
+    out.metrics.update(spark_totals(passes, len(spanned)))
+    out.metrics.update(_layers(ctx, path, corpus))
     return out
