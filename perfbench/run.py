@@ -125,6 +125,9 @@ def main(argv=None) -> int:
         out = workload.run(ctx, inputs)
         out.metrics["jvm_peak_rss_mib"] = _jvm_peak_rss_mib(spark)
         if tracer is not None:
+            from sparkstats import check_attribution
+
+            check_attribution(spark, [sp.group for sp in tracer.spans])
             trace_dir = os.path.join(ROOT, ".perfbench_work", "traces")
             os.makedirs(trace_dir, exist_ok=True)
             path = os.path.join(trace_dir, f"{args.workload}-seed{args.seed}.json")

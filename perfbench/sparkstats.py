@@ -106,12 +106,27 @@ def group_stats(sc, group: str) -> GroupStats:
     return out
 
 
+def check_attribution(spark, groups) -> None:
+    """Raise if one SQL execution ran jobs of two job groups, or of a group
+    and of no group: then a span's group would miss part of its work, such
+    as a broadcast or subquery job submitted from another thread."""
+    sc = spark.sparkContext
+    _drain(sc)
+    owner = {j: g for g in groups for j in sc.statusTracker().getJobIdsForGroup(g)}
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    for i in range(execs.length()):
+        ex = execs.apply(i)
+        held = {owner.get(j) for j in _ids(ex.jobs().keys())}
+        if len(held) > 1:
+            raise RuntimeError(
+                f"SQL execution {ex.executionId()} ran jobs of groups {sorted(map(str, held))}"
+            )
+
+
 def plan_rows(spark, group: str) -> dict[str, int]:
     """Output rows per plan-node name, summed over the final (adaptive)
     plans of the SQL executions that ran the job group's jobs.  A reused
-    exchange is one node, so a subtree Spark computes once counts once.
-    Raises if one of those executions also ran a job outside the group:
-    then the group would not hold all of the execution's work."""
+    exchange is one node, so a subtree Spark computes once counts once."""
     sc = spark.sparkContext
     _drain(sc)
     jobs = set(sc.statusTracker().getJobIdsForGroup(group))
@@ -120,11 +135,8 @@ def plan_rows(spark, group: str) -> dict[str, int]:
     rows: dict[str, int] = {}
     for i in range(execs.length()):
         ex = execs.apply(i)
-        ex_jobs = _ids(ex.jobs().keys())
-        if not ex_jobs & jobs:
+        if not _ids(ex.jobs().keys()) & jobs:
             continue
-        if not ex_jobs <= jobs:
-            raise RuntimeError(f"SQL execution {ex.executionId()} ran jobs outside {group}")
         values, it = {}, store.executionMetrics(ex.executionId()).iterator()
         while it.hasNext():
             kv = it.next()
