@@ -47,17 +47,25 @@ def same_ranking(got: list[tuple[int, float]], want: list[tuple[int, float]]) ->
 class PhraseOracle:
     """Exact-phrase answers from the analyzed positional stream: a doc
     matches at anchor ``s`` when every phrase term ``t_i`` sits at
-    ``s + offset_i`` (stopwords keep their position increments)."""
+    ``s + offset_i`` (stopwords keep their position increments).
 
-    def __init__(self, rows: list[dict]):
+    Only documents the BM25 oracle's postings list under every phrase term
+    are analyzed for positions, once each, when a phrase first needs them."""
+
+    def __init__(self, rows: list[dict], oracle):
+        self.texts = {int(r["doc_id"]): r["text"] or "" for r in rows}
+        self.postings = oracle.postings
+        self.pos: dict[int, dict[str, set[int]]] = {}
+
+    def _positions(self, doc_id: int) -> dict[str, set[int]]:
         from docs_indexer_spark.functions.analysis import analyze_with_positions
 
-        self.pos: dict[int, dict[str, set[int]]] = {}
-        for r in rows:
+        if doc_id not in self.pos:
             d: dict[str, set[int]] = defaultdict(set)
-            for term, p in analyze_with_positions(r["text"] or "", "english"):
+            for term, p in analyze_with_positions(self.texts[doc_id], "english"):
                 d[term].add(p)
-            self.pos[int(r["doc_id"])] = d
+            self.pos[doc_id] = d
+        return self.pos[doc_id]
 
     def topk(self, query: str, k: int) -> list[tuple[int, int, int]]:
         """[(doc_id, n_occurrences, first_pos)] by (occurrences desc,
@@ -67,8 +75,10 @@ class PhraseOracle:
         tp = analyze_with_positions(query, "english")
         if not tp:
             return []
+        docs = set.intersection(*(set(self.postings.get(t, ())) for t, _ in tp))
         hits = []
-        for doc_id, d in self.pos.items():
+        for doc_id in docs:
+            d = self._positions(doc_id)
             anchors = None
             for term, off in tp:
                 s = {p - off for p in d.get(term, ())}

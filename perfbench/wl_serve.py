@@ -387,7 +387,7 @@ def run(ctx, inputs) -> Outcome:
     rows = indexed_docs(spark, raw)
     oracle = oracle_index(rows)
     check_stats(out, build_metrics, oracle)
-    queries = make_queries(ctx.seed, corpus, rows, oracle, PhraseOracle(rows))
+    queries = make_queries(ctx.seed, corpus, rows, oracle, PhraseOracle(rows, oracle))
     print(
         f"perfbench: session {ctx.session_s:.2f}s build {t1 - t0:.2f}s "
         f"open {t2 - t1:.2f}s oracle {time.perf_counter() - t2:.2f}s",
